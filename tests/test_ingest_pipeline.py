@@ -1308,15 +1308,27 @@ def test_embedding_ingest_auto_compaction_bounds_gate_files(spark, tmp_path):
     kept_p = sorted(r.ref_id for r in spark.read.parquet(twin.vectors_path).collect())
     assert kept_a == kept_p
     # restart over the same base_dir: replayed embedding rejected, fresh kept
-    seed = emb.filter(F.col("vec_id") == 44).first().embedding
+    # a fresh direction (another generator seed): cosine with every stored
+    # vector is far below min_cos, so the restart must accept it
+    seed = synth_embeddings(spark, 1, seed=7).first().embedding
     accepted0 = spark.read.parquet(ing.vectors_path).first().ref_emb
     replay = spark.createDataFrame(
         [(900, [float(x) for x in accepted0]), (901, [float(x) for x in seed])],
         "vec_id long, embedding array<float>",
     )
+    # fake a crashed fold: a partial generation dir without _SUCCESS
+    import pathlib
+
+    gen_before = int(ing.buckets_path.split("ann-gen")[1].split("/")[0])
+    partial = pathlib.Path(tmp_path / "auto") / f"ann-gen{gen_before + 1}" / "buckets"
+    partial.mkdir(parents=True)
+    (partial / "part-00000.parquet").write_bytes(b"not a real file")
     ing2 = EmbeddingIngest(str(tmp_path / "auto"), cents, min_cos=0.9,
-                           auto_compact_files=4)
+                           auto_compact_files=1)
     ing2.process_batch(replay, 99)
     kept2 = {r.ref_id for r in spark.read.parquet(ing2.vectors_path).collect()}
-    assert 900 not in kept2
+    assert 900 not in kept2 and 901 in kept2
+    assert ing2.buckets_path != str(partial)  # partial dir never read
+    # the fold after the replay allocated PAST the partial dir
+    assert int(ing2.buckets_path.split("ann-gen")[1].split("/")[0]) > gen_before + 1
     emb.unpersist()
