@@ -1676,11 +1676,13 @@ def with_dhash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     hexed = df.withColumn(
         "_hex", F.expr(f"hex(rpad({payload_col}, {DHASH_BYTES}, x'00'))")
     )
-    # one conv per PIXEL, not per channel (r18): the 6-hex-digit chunk is
-    # the pixel's packed 24-bit RGB; shifts/masks split the channels.
-    # Codegen CSE collapses the three textually identical conv calls, so
-    # the per-row hex-parse work drops 3x (measured: full chain 1.31 ->
-    # 1.13 s at sf0.1/32c, bit-exact vs the per-channel form)
+    # each channel term parses the pixel's whole 6-hex-digit chunk (its
+    # packed 24-bit RGB) and shifts/masks out its channel, instead of
+    # parsing its own 2-digit substring (r18).  Measured: full chain
+    # 1.31 -> 1.13 s at sf0.1/32c, bit-exact vs the per-channel form.
+    # No mechanism is claimed: the three conv calls sit inside a
+    # transform() lambda, where codegen does no subexpression
+    # elimination (see functions/text.py)
     gray = hexed.withColumn(
         "_gray",
         F.expr(

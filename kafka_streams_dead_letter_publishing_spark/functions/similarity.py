@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from kafka_streams_dead_letter_publishing_spark.functions.text import sql_ident
+
 EMBEDDING_DIM = 64
 
 #: Plane count for the ORACLE-registered query (the oracle SQL string is
@@ -207,7 +209,8 @@ def dot(a: Column | str, b: Column | str) -> Column:
 
 
 @_functools.lru_cache(maxsize=64)
-def _dot_sql_expr(a_sql: str, b_sql: str) -> str:
+def _dot_sql_expr(a: str, b: str) -> str:
+    a_sql, b_sql = sql_ident(a), sql_ident(b)
     return (
         f"aggregate(zip_with({a_sql}, {b_sql}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -369,13 +372,14 @@ def lsh_table_keys_int(
 
 @_functools.lru_cache(maxsize=64)
 def _lsh_table_keys_int_sql(
-    emb_sql: str, n_tables: int, planes_per_table: int
+    emb: str, n_tables: int, planes_per_table: int
 ) -> str:
     """One SQL string for the full :func:`lsh_table_keys_int` array over a
     named column — term-for-term the Column construction (same dim guard,
     same ``CAST('{repr}' AS DOUBLE)`` plane literals, same fold order and
     integer widths), so the analyzed expressions — and every sign bit —
     are identical."""
+    emb_sql = sql_ident(emb)
     guard = (
         f"CASE WHEN size({emb_sql}) = {EMBEDDING_DIM} THEN {emb_sql} "
         "ELSE raise_error(concat("

@@ -81,6 +81,16 @@ def fingerprint(text: Column) -> Column:
     return F.md5(norm_text(text))
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, so a column NAME with
+    a hyphen, a space or a reserved word means the same column inside an
+    ``F.expr`` string as in ``F.col(name)`` (a dotted name is taken as
+    one column name, not a struct path).  Backticks are refused."""
+    if "`" in name:
+        raise ValueError(f"column name {name!r} contains a backtick")
+    return f"`{name}`"
+
+
 #: sentinel greater than any md5 hex string ('~' > 'f' in ASCII)
 _MINHASH_SENTINEL = "~"
 
@@ -111,10 +121,11 @@ def minhash_array(shingle_col: Column | str) -> Column:
 
 
 @_functools.lru_cache(maxsize=32)
-def _minhash_array_sql(sh_sql: str) -> str:
+def _minhash_array_sql(shingle_col: str) -> str:
     """One SQL string for :func:`minhash_array` over a named column —
     term-for-term the Column construction, so the analyzed expressions
     (and every hash value) are identical."""
+    sh_sql = sql_ident(shingle_col)
     hashes = ", ".join(
         f"md5(concat('{j}:', s))" for j in range(N_MINHASH)
     )
@@ -155,7 +166,8 @@ def band_keys_from_minhash(
 
 
 @_functools.lru_cache(maxsize=32)
-def _band_keys_sql(mh_sql: str, n_sh_sql: str) -> str:
+def _band_keys_sql(mh: str, n_shingles: str) -> str:
+    mh_sql, n_sh_sql = sql_ident(mh), sql_ident(n_shingles)
     keys = ", ".join(
         f"concat('{b}:', element_at({mh_sql}, {2 * b + 1}), '|', "
         f"element_at({mh_sql}, {2 * b + 2}))"
@@ -316,7 +328,8 @@ def minhash_array_fast(shingle_col: Column | str) -> Column:
 
 
 @_functools.lru_cache(maxsize=32)
-def _minhash_array_fast_sql(sh_sql: str) -> str:
+def _minhash_array_fast_sql(shingle_col: str) -> str:
+    sh_sql = sql_ident(shingle_col)
     hashes = ", ".join(f"xxhash64({j}, s)" for j in range(N_MINHASH))
     return (
         f"aggregate({sh_sql}, array_repeat(CAST({_MINHASH_FAST_SENTINEL} "
@@ -349,7 +362,8 @@ def band_keys_from_minhash_fast(
 
 
 @_functools.lru_cache(maxsize=32)
-def _band_keys_fast_sql(mh_sql: str, n_sh_sql: str) -> str:
+def _band_keys_fast_sql(mh: str, n_shingles: str) -> str:
+    mh_sql, n_sh_sql = sql_ident(mh), sql_ident(n_shingles)
     keys = ", ".join(
         f"xxhash64({b}, element_at({mh_sql}, {2 * b + 1}), "
         f"element_at({mh_sql}, {2 * b + 2}))"

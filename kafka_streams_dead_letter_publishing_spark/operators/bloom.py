@@ -47,6 +47,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_dead_letter_publishing_spark.operators.stores import (
+    allocate_epoch,
+    commit_epoch,
+    completed_epochs,
+    read_completed,
+)
+
 WORD_BITS = 63  # bits per word; keeps 1<<bit off the sign bit in BOTH engines
 DEFAULT_M_BITS = 1 << 14
 DEFAULT_N_HASHES = 5
@@ -132,11 +139,10 @@ def bloom_maybe_contains(
 #
 # Bloom words are ASSOCIATIVE (and idempotent) bit_or folds, so the gate
 # stays current on a stream by appending per-batch partial words under
-# the repo's epoch-SET contract (operators/pca.py moments shape: words
-# FIRST at an epoch allocated above any orphan, stats row LAST, readers
-# fold only epochs that HAVE a stats row).  Like the KMV sketch — and
-# unlike bm25/moments/cms — a REPLAYED batch is harmless: re-OR-ing the
-# same bits is a no-op, so at-least-once delivery needs no compensation.
+# the epoch contract of operators/stores.py (partial table ``words``).
+# Like the KMV sketch — and unlike bm25/moments/cms — a REPLAYED batch is
+# harmless: re-OR-ing the same bits is a no-op, so at-least-once
+# delivery needs no compensation.
 
 
 def bloom_append(
@@ -151,35 +157,15 @@ def bloom_append(
     batch).  Layout: ``{path}/words`` (word_idx, word, epoch) — at most
     ceil(m_bits/63) metadata rows per epoch — and ``{path}/stats`` one
     (epoch) row per completed append written LAST."""
-    from kafka_streams_dead_letter_publishing_spark.operators.bm25 import (
-        _store_exists,
-    )
-
     spark = batch_df.sparkSession
-    epoch = -1
-    if _store_exists(spark, f"{path}/stats"):
-        epoch = (
-            spark.read.parquet(f"{path}/stats").agg(F.max("epoch")).first()[0]
-        )
-    new_epoch = epoch + 1
-    if _store_exists(spark, f"{path}/words"):
-        omax = (
-            spark.read.parquet(f"{path}/words").agg(F.max("epoch")).first()[0]
-        )
-        if omax is not None and omax >= new_epoch:
-            new_epoch = omax + 1
+    ep = allocate_epoch(spark, path, ("words",))
     words = bloom_build(batch_df, key_col, n_hashes, m_bits).localCheckpoint(
         eager=True
     )
     if not words.count():
-        return epoch
-    words.withColumn("epoch", F.lit(new_epoch).cast("long")).write.mode(
-        "append"
-    ).parquet(f"{path}/words")
-    spark.createDataFrame([(new_epoch,)], "epoch bigint").write.mode(
-        "append"
-    ).parquet(f"{path}/stats")
-    return new_epoch
+        return ep.current
+    commit_epoch(spark, path, ep.new, {"words": words})
+    return ep.new
 
 
 def bloom_read(spark, path: str) -> DataFrame:
@@ -187,19 +173,9 @@ def bloom_read(spark, path: str) -> DataFrame:
     word-wise bit_or, bit-identical to a one-shot ``bloom_build`` over
     everything appended (ORs are order-free and idempotent;
     test-pinned), so ``bloom_maybe_contains`` composes unchanged."""
-    stats_df = spark.read.parquet(f"{path}/stats")
-    if not stats_df.take(1):
-        raise ValueError(
-            f"bloom_read: {path}/stats holds no rows — no append ever "
-            "completed (stats are the completion gate)"
-        )
+    _, epochs = completed_epochs(spark, path, "bloom_read")
     return (
-        spark.read.parquet(f"{path}/words")
-        .join(
-            F.broadcast(stats_df.select("epoch").distinct()),
-            "epoch",
-            "left_semi",
-        )
+        read_completed(spark, path, "words", epochs)
         .groupBy("word_idx")
         .agg(F.bit_or("word").alias("word"))
     )
@@ -209,9 +185,7 @@ def bloom_compact(spark, src_path: str, dst_path: str) -> None:
     """Fold the per-epoch partials to ONE epoch-0 filter at a NEW path
     (swap by repoint); orphans from a crashed append are dropped by the
     epoch-SET read.  Membership answers are preserved exactly."""
-    bloom_read(spark, src_path).withColumn(
-        "epoch", F.lit(0).cast("long")
-    ).write.mode("errorifexists").parquet(f"{dst_path}/words")
-    spark.createDataFrame([(0,)], "epoch bigint").write.mode(
-        "errorifexists"
-    ).parquet(f"{dst_path}/stats")
+    commit_epoch(
+        spark, dst_path, 0, {"words": bloom_read(spark, src_path)},
+        mode="errorifexists",
+    )

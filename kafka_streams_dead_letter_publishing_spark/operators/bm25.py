@@ -62,6 +62,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_dead_letter_publishing_spark.functions.text import norm_text, tokens
+from kafka_streams_dead_letter_publishing_spark.operators.stores import (
+    allocate_epoch,
+    commit_epoch,
+    completed_epochs,
+    read_completed,
+)
 
 #: (query_id, terms) probes used by the registry row — drawn from the
 #: synthetic documents' vocabulary so every query matches a real subset.
@@ -294,6 +300,7 @@ def bm25_oracle_sql(
 # batch is row-for-row identical to the full-scan operator (test-pinned).
 
 N_TERM_BUCKETS = 64
+BM25_STATS_SCHEMA = "n_docs bigint, total_tokens bigint, max_dl bigint, epoch bigint"
 
 
 def _term_bucket(term: Column, n_buckets: int = N_TERM_BUCKETS) -> Column:
@@ -306,22 +313,6 @@ def _py_term_bucket(term: str, n_buckets: int = N_TERM_BUCKETS) -> int:
     import hashlib
 
     return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % n_buckets
-
-
-def _store_exists(spark, path: str) -> bool:
-    """True iff ``path`` holds at least one data file — the Hadoop
-    FileSystem probe (streaming/ingest_pipeline.py's contract: a
-    driver-local listdir would silently disengage on hdfs:// / s3a://)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return False
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not (name.startswith("_") or name.startswith(".")):
-            return True
-    return False
 
 
 def _batch_postings(
@@ -405,70 +396,36 @@ def bm25_append(
     depends on global (N, sum dl, max dl), so each append writes a new
     RUNNING-TOTAL stats row (associative merges — base + batch, exactly
     the CMS cell-merge contract), and the batch's postings carry the
-    same epoch.  Write order is postings FIRST, stats LAST: a crash
-    between the two leaves orphan postings with no matching stats row,
-    and ``bm25_serve`` scans only epochs that HAVE a stats row (epoch-SET
-    gate, not a threshold) — it keeps serving the last COMPLETE snapshot
-    (postings and the stats they were scored against always agree; the
-    orphans are reclaimed by :func:`bm25_compact`).  The new epoch is
-    allocated ABOVE both the newest stats epoch and any epoch already
-    present in the postings, so a crash-then-retry never reuses an
-    orphan's epoch — with a threshold gate a retry at the orphan's
-    epoch would make the orphan's tf rows servable alongside the
-    retry's, double-counting the retried docs' scores while the stats
-    row counts them once.  Bootstrapping on an empty path is epoch 0,
+    same epoch.  Commit: the epoch contract of operators/stores.py
+    (partial table ``postings``) — ``bm25_serve`` keeps serving the last
+    COMPLETE snapshot, so postings and the stats they were scored
+    against always agree, and orphans are reclaimed by
+    :func:`bm25_compact`.  Bootstrapping on an empty path is epoch 0,
     identical to :func:`bm25_index` on the same batch (test-pinned).
 
-    Single-writer contract (same as every store in the repo): appends
-    come from a serialized ``foreachBatch`` body, never concurrently.
     Appended docs are NEW docs — re-sending a doc_id double-counts it,
     exactly as it would in the vector stores."""
     spark = batch_docs.sparkSession
-    if _store_exists(spark, f"{path}/stats"):
-        base = (
-            spark.read.parquet(f"{path}/stats")
-            .orderBy(F.desc("epoch"))
-            .first()
-        )
-        base_n, base_t = base.n_docs, base.total_tokens
-        base_mx, epoch = base.max_dl, base.epoch
-    else:
-        base_n = base_t = base_mx = 0
-        epoch = -1
-    # never land on an orphan's epoch: a crashed prior append may have
-    # left postings ABOVE the newest stats epoch (parquet footer max —
-    # a metadata read, not a corpus scan)
-    new_epoch = epoch + 1
-    if _store_exists(spark, f"{path}/postings"):
-        omax = (
-            spark.read.parquet(f"{path}/postings")
-            .agg(F.max("epoch"))
-            .first()[0]
-        )
-        if omax is not None and omax >= new_epoch:
-            new_epoch = omax + 1
+    ep = allocate_epoch(spark, path, ("postings",))
     postings, stats = _batch_postings(
-        batch_docs, text_col, id_col, n_buckets, epoch=new_epoch, pin=True
+        batch_docs, text_col, id_col, n_buckets, epoch=ep.new, pin=True
     )
     srow = stats.first()
     if not srow.n_docs:
-        return epoch  # empty batch: no postings, no epoch advance
-    postings.write.mode("append").partitionBy("bucket").parquet(
-        f"{path}/postings"
+        return ep.current  # empty batch: no postings, no epoch advance
+    base = ep.newest or {"n_docs": 0, "total_tokens": 0, "max_dl": 0}
+    commit_epoch(
+        spark, path, ep.new, {"postings": postings},
+        (
+            base["n_docs"] + srow.n_docs,
+            base["total_tokens"] + srow.total_tokens,
+            max(base["max_dl"], srow.max_dl),
+            ep.new,
+        ),
+        BM25_STATS_SCHEMA,
+        partition_by="bucket",
     )
-    merged = spark.createDataFrame(
-        [
-            (
-                base_n + srow.n_docs,
-                base_t + srow.total_tokens,
-                max(base_mx, srow.max_dl),
-                new_epoch,
-            )
-        ],
-        "n_docs bigint, total_tokens bigint, max_dl bigint, epoch bigint",
-    )
-    merged.write.mode("append").parquet(f"{path}/stats")
-    return new_epoch
+    return ep.new
 
 
 def bm25_compact(spark, src_path: str, dst_path: str) -> None:
@@ -482,19 +439,15 @@ def bm25_compact(spark, src_path: str, dst_path: str) -> None:
     path — swap by repoint, never in place, so a concurrent reader
     always sees a complete index.  Served results are preserved
     row-for-row (test-pinned)."""
-    stats_df = spark.read.parquet(f"{src_path}/stats")
-    srow = stats_df.orderBy(F.desc("epoch")).first()
-    spark.read.parquet(f"{src_path}/postings").join(
-        F.broadcast(stats_df.select("epoch").distinct()), "epoch", "left_semi"
-    ).withColumn(
-        "epoch", F.lit(srow.epoch).cast("long")
-    ).repartition("bucket").write.mode("errorifexists").partitionBy(
-        "bucket"
-    ).parquet(f"{dst_path}/postings")
-    spark.createDataFrame(
-        [(srow.n_docs, srow.total_tokens, srow.max_dl, srow.epoch)],
-        "n_docs bigint, total_tokens bigint, max_dl bigint, epoch bigint",
-    ).write.mode("errorifexists").parquet(f"{dst_path}/stats")
+    srow, epochs = completed_epochs(spark, src_path, "bm25_compact")
+    postings = read_completed(spark, src_path, "postings", epochs)
+    commit_epoch(
+        spark, dst_path, srow.epoch, {"postings": postings.repartition("bucket")},
+        (srow.n_docs, srow.total_tokens, srow.max_dl, srow.epoch),
+        BM25_STATS_SCHEMA,
+        mode="errorifexists",
+        partition_by="bucket",
+    )
 
 
 def bm25_serve(
@@ -513,28 +466,15 @@ def bm25_serve(
     fail-closed, see :func:`bm25_append`).  Row-for-row identical to
     :func:`bm25_topk` on the same corpus — document frequencies are
     exact because a term's postings live entirely in its bucket."""
-    stats_df = spark.read.parquet(f"{path}/stats")
-    srow = stats_df.orderBy(F.desc("epoch")).first()
-    if srow is None:
-        raise ValueError(
-            f"bm25_serve: {path}/stats holds no rows — the index build "
-            "never completed (stats are the completion gate); rebuild "
-            "with bm25_index or re-run the failed bm25_append"
-        )
+    srow, epochs = completed_epochs(spark, path, "bm25_serve")
     n_docs, total_t = srow.n_docs, srow.total_tokens
     if not n_docs or not total_t:
         return spark.createDataFrame([], _EMPTY_RESULT_SCHEMA)
     needed = sorted(
         {_py_term_bucket(t, n_buckets) for _, terms in queries for t in terms}
     )
-    postings = (
-        spark.read.parquet(f"{path}/postings")
-        .filter(F.col("bucket").isin(needed))
-        .join(
-            F.broadcast(stats_df.select("epoch").distinct()),
-            "epoch",
-            "left_semi",
-        )
+    postings = read_completed(spark, path, "postings", epochs).filter(
+        F.col("bucket").isin(needed)
     )
     qdf = query_terms_df(spark, queries)
     tf = postings.join(F.broadcast(qdf), "term").select(

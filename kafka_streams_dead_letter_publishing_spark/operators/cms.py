@@ -40,6 +40,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_dead_letter_publishing_spark.operators.stores import (
+    allocate_epoch,
+    commit_epoch,
+    completed_epochs,
+    read_completed,
+)
+
 DEFAULT_WIDTH = 512
 DEFAULT_DEPTH = 4
 
@@ -111,13 +118,10 @@ def cms_estimate(
 # ── streamed store (the heavy-hitter sketch's ingest twin) ───────────────
 #
 # CMS cells are ASSOCIATIVE integer sums, so the sketch stays current on
-# a stream by appending per-batch partial cells — the operators/pca.py
-# moments-store shape exactly (and the same epoch-SET contract: cells
-# land FIRST at an epoch allocated above any orphan, the stats row lands
-# LAST, readers fold only epochs that HAVE a stats row, so a crashed
-# append is invisible and a crash-then-retry can never double-count).
-# Unlike the KMV set-sketch, REPLAYING a batch here double-counts —
-# the same at-least-once caveat as bm25/moments.
+# a stream by appending per-batch partial cells under the epoch contract
+# of operators/stores.py (partial table ``cells``).  Unlike the KMV
+# set-sketch, REPLAYING a batch here double-counts — the same
+# at-least-once caveat as bm25/moments.
 
 
 def cms_append(
@@ -132,35 +136,15 @@ def cms_append(
     Layout: ``{path}/cells`` (j, col, cnt, epoch) per-batch partials —
     <= depth*width metadata rows per epoch — and ``{path}/stats`` one
     (epoch) row per completed append written LAST."""
-    from kafka_streams_dead_letter_publishing_spark.operators.bm25 import (
-        _store_exists,
-    )
-
     spark = batch_df.sparkSession
-    epoch = -1
-    if _store_exists(spark, f"{path}/stats"):
-        epoch = (
-            spark.read.parquet(f"{path}/stats").agg(F.max("epoch")).first()[0]
-        )
-    new_epoch = epoch + 1
-    if _store_exists(spark, f"{path}/cells"):
-        omax = (
-            spark.read.parquet(f"{path}/cells").agg(F.max("epoch")).first()[0]
-        )
-        if omax is not None and omax >= new_epoch:
-            new_epoch = omax + 1
+    ep = allocate_epoch(spark, path, ("cells",))
     sk = cms_build(batch_df, key_col, depth, width).localCheckpoint(
         eager=True
     )
     if not sk.count():
-        return epoch
-    sk.withColumn("epoch", F.lit(new_epoch).cast("long")).write.mode(
-        "append"
-    ).parquet(f"{path}/cells")
-    spark.createDataFrame([(new_epoch,)], "epoch bigint").write.mode(
-        "append"
-    ).parquet(f"{path}/stats")
-    return new_epoch
+        return ep.current
+    commit_epoch(spark, path, ep.new, {"cells": sk})
+    return ep.new
 
 
 def cms_read(spark, path: str) -> DataFrame:
@@ -168,19 +152,9 @@ def cms_read(spark, path: str) -> DataFrame:
     cell-wise integer sum, bit-identical to a one-shot ``cms_build``
     over everything appended (associative sums are batching-free;
     test-pinned), so ``cms_estimate`` composes unchanged."""
-    stats_df = spark.read.parquet(f"{path}/stats")
-    if not stats_df.take(1):
-        raise ValueError(
-            f"cms_read: {path}/stats holds no rows — no append ever "
-            "completed (stats are the completion gate)"
-        )
+    _, epochs = completed_epochs(spark, path, "cms_read")
     return (
-        spark.read.parquet(f"{path}/cells")
-        .join(
-            F.broadcast(stats_df.select("epoch").distinct()),
-            "epoch",
-            "left_semi",
-        )
+        read_completed(spark, path, "cells", epochs)
         .groupBy("j", "col")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -190,9 +164,7 @@ def cms_compact(spark, src_path: str, dst_path: str) -> None:
     """Fold the per-epoch partials to ONE epoch-0 sketch at a NEW path
     (swap by repoint); orphans from a crashed append are dropped by the
     epoch-SET read.  Estimates are preserved exactly (cell-wise sums)."""
-    cms_read(spark, src_path).withColumn(
-        "epoch", F.lit(0).cast("long")
-    ).write.mode("errorifexists").parquet(f"{dst_path}/cells")
-    spark.createDataFrame([(0,)], "epoch bigint").write.mode(
-        "errorifexists"
-    ).parquet(f"{dst_path}/stats")
+    commit_epoch(
+        spark, dst_path, 0, {"cells": cms_read(spark, src_path)},
+        mode="errorifexists",
+    )

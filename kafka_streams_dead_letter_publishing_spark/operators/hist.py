@@ -27,11 +27,10 @@ Spark-first layout
   into the edge bins (visible as mass at bin 0 / bins−1 — a monitoring
   signal, not silent loss).
 * **merge** = cell-wise SUM (associative — the CMS contract), so
-  per-batch partials stream under the repo's epoch-SET store contract
-  (partials FIRST at an epoch allocated above any orphan, stats row
-  LAST, readers fold only completed epochs; a crashed append is
-  invisible, a replay double-counts — the bm25/moments at-least-once
-  caveat, NOT the KMV/Bloom set-idempotent one).
+  per-batch partials stream under the epoch contract of
+  operators/stores.py (partial table ``cells``); a replay double-counts
+  — the bm25/moments at-least-once caveat, NOT the KMV/Bloom
+  set-idempotent one.
 * **quantile readout**: cumulative-sum window over the SKETCH (≤ bins
   rows per group — metadata, never event data), then
   ``min(bin | cum ≥ ceil(n·p))`` with the rank in exact integers
@@ -47,7 +46,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kafka_streams_dead_letter_publishing_spark.operators.bm25 import _store_exists
+from kafka_streams_dead_letter_publishing_spark.operators.stores import (
+    allocate_epoch,
+    commit_epoch,
+    completed_epochs,
+    read_completed,
+)
 
 HIST_BINS = 256
 HIST_LO = 0.0
@@ -170,49 +174,23 @@ def hist_append(
     (group, bin, cnt, epoch) and ``{path}/stats`` one (epoch) row per
     completed append, written LAST."""
     spark = batch_df.sparkSession
-    epoch = -1
-    if _store_exists(spark, f"{path}/stats"):
-        epoch = (
-            spark.read.parquet(f"{path}/stats").agg(F.max("epoch")).first()[0]
-        )
-    new_epoch = epoch + 1
-    if _store_exists(spark, f"{path}/cells"):
-        omax = (
-            spark.read.parquet(f"{path}/cells").agg(F.max("epoch")).first()[0]
-        )
-        if omax is not None and omax >= new_epoch:
-            new_epoch = omax + 1
+    ep = allocate_epoch(spark, path, ("cells",))
     sk = hist_build(batch_df, group_col, value_col, lo, width, bins).localCheckpoint(
         eager=True
     )
     if not sk.count():
-        return epoch
-    sk.withColumn("epoch", F.lit(new_epoch).cast("long")).write.mode(
-        "append"
-    ).parquet(f"{path}/cells")
-    spark.createDataFrame([(new_epoch,)], "epoch bigint").write.mode(
-        "append"
-    ).parquet(f"{path}/stats")
-    return new_epoch
+        return ep.current
+    commit_epoch(spark, path, ep.new, {"cells": sk})
+    return ep.new
 
 
 def hist_read(spark, path: str) -> DataFrame:
     """The merged sketch (group, bin, cnt) over every COMPLETE epoch —
     cell-wise integer sum, bit-identical to a one-shot ``hist_build``
     over everything appended (associative sums; test-pinned)."""
-    stats_df = spark.read.parquet(f"{path}/stats")
-    if not stats_df.take(1):
-        raise ValueError(
-            f"hist_read: {path}/stats holds no rows — no append ever "
-            "completed (stats are the completion gate)"
-        )
+    _, epochs = completed_epochs(spark, path, "hist_read")
     return (
-        spark.read.parquet(f"{path}/cells")
-        .join(
-            F.broadcast(stats_df.select("epoch").distinct()),
-            "epoch",
-            "left_semi",
-        )
+        read_completed(spark, path, "cells", epochs)
         .groupBy("group", "bin")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -222,9 +200,7 @@ def hist_compact(spark, src_path: str, dst_path: str) -> None:
     """Fold the per-epoch partials to ONE epoch-0 sketch at a NEW path
     (swap by repoint); orphans from a crashed append are dropped by the
     epoch-SET read.  Quantile readouts are preserved exactly."""
-    hist_read(spark, src_path).withColumn(
-        "epoch", F.lit(0).cast("long")
-    ).write.mode("errorifexists").parquet(f"{dst_path}/cells")
-    spark.createDataFrame([(0,)], "epoch bigint").write.mode(
-        "errorifexists"
-    ).parquet(f"{dst_path}/stats")
+    commit_epoch(
+        spark, dst_path, 0, {"cells": hist_read(spark, src_path)},
+        mode="errorifexists",
+    )

@@ -21,15 +21,10 @@ everything appended (test-pinned).  Exactness below capacity survives
 batching: a group's merged sketch holds fewer than K hashes only if no
 batch ever truncated it, i.e. every distinct key's hash is present.
 
-Epoch contract (the r12 epoch-SET form, crash-retry safe): per-batch
-mins land FIRST stamped with an epoch allocated ABOVE both the newest
-stats epoch and any epoch already present in the mins files, the stats
-row lands LAST, and readers fold only epochs that HAVE a stats row —
-a crashed append leaves invisible orphans and a retry can never collide
-with them.  Single serialized writer (the foreachBatch contract).
-Re-sending the same keys is HARMLESS here, unlike bm25/moments: the
-sketch is a set, duplicates vanish in the merge — at-least-once
-delivery needs no reader-side compensation.
+Commit: the epoch contract of operators/stores.py (partial table
+``mins``).  Replay: re-sending the same keys is HARMLESS here, unlike
+bm25/moments: the sketch is a set, duplicates vanish in the merge —
+at-least-once delivery needs no reader-side compensation.
 
 Scale shape: a batch sketch is one hash-shuffle (distinct) plus the
 repo's two-phase top-K (partition-local window on (pid, group), global
@@ -42,7 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kafka_streams_dead_letter_publishing_spark.operators.bm25 import _store_exists
+from kafka_streams_dead_letter_publishing_spark.operators.stores import (
+    allocate_epoch,
+    commit_epoch,
+    completed_epochs,
+    read_completed,
+)
 
 KMV_K = 64
 KMV_SCALE = 1 << 52  # 13 hex chars
@@ -106,31 +106,15 @@ def kmv_append(
     sketches, ``{path}/stats`` one (epoch) row per completed append
     written LAST."""
     spark = batch_df.sparkSession
-    epoch = -1
-    if _store_exists(spark, f"{path}/stats"):
-        epoch = (
-            spark.read.parquet(f"{path}/stats").agg(F.max("epoch")).first()[0]
-        )
-    new_epoch = epoch + 1
-    if _store_exists(spark, f"{path}/mins"):
-        omax = (
-            spark.read.parquet(f"{path}/mins").agg(F.max("epoch")).first()[0]
-        )
-        if omax is not None and omax >= new_epoch:
-            new_epoch = omax + 1
+    ep = allocate_epoch(spark, path, ("mins",))
     # one materialization: the sketch is <= groups*k rows of metadata
     sk = kmv_sketch(batch_df, group_col, key_col, k).localCheckpoint(
         eager=True
     )
     if not sk.count():
-        return epoch
-    sk.withColumn("epoch", F.lit(new_epoch).cast("long")).write.mode(
-        "append"
-    ).parquet(f"{path}/mins")
-    spark.createDataFrame([(new_epoch,)], "epoch bigint").write.mode(
-        "append"
-    ).parquet(f"{path}/stats")
-    return new_epoch
+        return ep.current
+    commit_epoch(spark, path, ep.new, {"mins": sk})
+    return ep.new
 
 
 def kmv_read_mins(spark, path: str, k: int = KMV_K) -> DataFrame:
@@ -138,23 +122,9 @@ def kmv_read_mins(spark, path: str, k: int = KMV_K) -> DataFrame:
     dedup, retake the k smallest per group.  Bit-identical to
     ``kmv_sketch`` over everything appended (the KMV merge law,
     test-pinned)."""
-    stats_df = spark.read.parquet(f"{path}/stats")
-    if not stats_df.take(1):
-        raise ValueError(
-            f"kmv_read_mins: {path}/stats holds no rows — no append ever "
-            "completed (stats are the completion gate)"
-        )
-    merged = (
-        spark.read.parquet(f"{path}/mins")
-        .join(
-            F.broadcast(stats_df.select("epoch").distinct()),
-            "epoch",
-            "left_semi",
-        )
-        .select("group", "h")
-        .distinct()
-    )
-    return _k_smallest(merged, k)
+    _, epochs = completed_epochs(spark, path, "kmv_read_mins")
+    merged = read_completed(spark, path, "mins", epochs).select("group", "h")
+    return _k_smallest(merged.distinct(), k)
 
 
 def kmv_estimate(spark, path: str, k: int = KMV_K) -> DataFrame:
@@ -346,9 +316,7 @@ def kmv_compact(spark, src_path: str, dst_path: str, k: int = KMV_K) -> None:
     (swap by repoint — a concurrent reader always sees a complete
     store); orphans from a crashed append are dropped by the epoch-SET
     read.  The merged sketch is preserved bit for bit (merge law)."""
-    kmv_read_mins(spark, src_path, k).withColumn(
-        "epoch", F.lit(0).cast("long")
-    ).write.mode("errorifexists").parquet(f"{dst_path}/mins")
-    spark.createDataFrame([(0,)], "epoch bigint").write.mode(
-        "errorifexists"
-    ).parquet(f"{dst_path}/stats")
+    commit_epoch(
+        spark, dst_path, 0, {"mins": kmv_read_mins(spark, src_path, k)},
+        mode="errorifexists",
+    )

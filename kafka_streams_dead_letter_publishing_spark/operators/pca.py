@@ -43,8 +43,15 @@ from kafka_streams_dead_letter_publishing_spark.operators.kmeans import (
     QUANT_SCALE,
     quantize_embedding,
 )
+from kafka_streams_dead_letter_publishing_spark.operators.stores import (
+    allocate_epoch,
+    commit_epoch,
+    completed_epochs,
+    read_completed,
+)
 
 _DEC = "decimal(38,0)"
+MOMENTS_STATS_SCHEMA = "n_rows bigint, epoch bigint"
 
 
 #: isqrt(2^63 - 1): a quantized component beyond this overflows q*q in a
@@ -310,13 +317,9 @@ def _dot_centered(vec_col: Column, comp: list[float], mean: list[float]) -> Colu
 # pca_fit, power_direction, the variance-explained gate that decides
 # whether PCA pre-reduction is worth running (SCALE.md r11) — can stay
 # current on a STREAMING corpus by appending per-batch partial cells,
-# never re-scanning.  Same epoch contract as operators/bm25.bm25_append:
-# per-batch cells land FIRST stamped with a fresh epoch allocated ABOVE
-# both the newest stats epoch and any epoch already present in the
-# cells (so a crash-then-retry never reuses an orphan's epoch), the
-# running stats row lands LAST, and readers fold only epochs that HAVE
-# a stats row (epoch-SET gate) — a crashed append leaves invisible
-# orphans, never a half-merged or double-counted model.
+# never re-scanning.  Commit: the epoch contract of operators/stores.py
+# (partial tables ``cells`` and ``sums``, a running n_rows total in the
+# stats row).
 
 
 def moments_append(
@@ -326,30 +329,11 @@ def moments_append(
     persisted store and advance the epoch (returned).  Layout:
     ``{path}/cells`` (i, j, gram DECIMAL(38,0), n, epoch) upper-triangle
     per-batch partials, ``{path}/sums`` (i, s, epoch), ``{path}/stats``
-    one running (n_rows, epoch) row per epoch written LAST.  Single
-    serialized writer (the foreachBatch contract); appended rows are new
-    rows — replays double-count, exactly as in the vector stores."""
-    from kafka_streams_dead_letter_publishing_spark.operators.bm25 import (
-        _store_exists,
-    )
-
+    one running (n_rows, epoch) row per epoch written LAST.  Appended
+    rows are new rows — replays double-count, exactly as in the vector
+    stores."""
     spark = batch_df.sparkSession
-    if _store_exists(spark, f"{path}/stats"):
-        base = (
-            spark.read.parquet(f"{path}/stats").orderBy(F.desc("epoch")).first()
-        )
-        base_n, epoch = base.n_rows, base.epoch
-    else:
-        base_n, epoch = 0, -1
-    # never land on an orphan's epoch: a crashed prior append may have
-    # left cells/sums ABOVE the newest stats epoch (parquet footer max)
-    new_epoch = epoch + 1
-    if _store_exists(spark, f"{path}/cells"):
-        omax = (
-            spark.read.parquet(f"{path}/cells").agg(F.max("epoch")).first()[0]
-        )
-        if omax is not None and omax >= new_epoch:
-            new_epoch = omax + 1
+    ep = allocate_epoch(spark, path, ("cells", "sums"))
     # one materialization feeds the cells, the sums, AND the row count —
     # a source with non-stable ordering can't make them disagree (and
     # the quantize pass runs once, not three times)
@@ -358,7 +342,7 @@ def moments_append(
     ).localCheckpoint(eager=True)
     batch_n = q.count()
     if not batch_n:
-        return epoch
+        return ep.current
     rows_i = q.select("qx", F.posexplode("qx").alias("i", "xi"))
     prods = rows_i.select(
         "i",
@@ -371,18 +355,13 @@ def moments_append(
         F.sum(F.col("p").cast(_DEC)).cast(_DEC).alias("gram"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )
-    cells.withColumn("epoch", F.lit(new_epoch).cast("long")).write.mode(
-        "append"
-    ).parquet(f"{path}/cells")
-    rows_i.groupBy("i").agg(
-        F.sum("xi").cast("long").alias("s")
-    ).withColumn("epoch", F.lit(new_epoch).cast("long")).write.mode(
-        "append"
-    ).parquet(f"{path}/sums")
-    spark.createDataFrame(
-        [(base_n + batch_n, new_epoch)], "n_rows bigint, epoch bigint"
-    ).write.mode("append").parquet(f"{path}/stats")
-    return new_epoch
+    sums = rows_i.groupBy("i").agg(F.sum("xi").cast("long").alias("s"))
+    base_n = 0 if ep.newest is None else ep.newest.n_rows
+    commit_epoch(
+        spark, path, ep.new, {"cells": cells, "sums": sums},
+        (base_n + batch_n, ep.new), MOMENTS_STATS_SCHEMA,
+    )
+    return ep.new
 
 
 def moments_read(spark, path: str) -> DataFrame:
@@ -394,17 +373,9 @@ def moments_read(spark, path: str) -> DataFrame:
     one-shot ``second_moments`` over the same rows (integer sums are
     order-free; test-pinned), so ``scaled_covariance``, ``pca_fit`` and
     ``power_direction`` compose unchanged."""
-    stats_df = spark.read.parquet(f"{path}/stats")
-    srow = stats_df.orderBy(F.desc("epoch")).first()
-    if srow is None:
-        raise ValueError(
-            f"moments_read: {path}/stats holds no rows — no append ever "
-            "completed (stats are the completion gate)"
-        )
-    complete = F.broadcast(stats_df.select("epoch").distinct())
+    _, epochs = completed_epochs(spark, path, "moments_read")
     gram = (
-        spark.read.parquet(f"{path}/cells")
-        .join(complete, "epoch", "left_semi")
+        read_completed(spark, path, "cells", epochs)
         .groupBy("i", "j")
         .agg(
             F.sum("gram").cast(_DEC).alias("gram"),
@@ -412,8 +383,7 @@ def moments_read(spark, path: str) -> DataFrame:
         )
     )
     sums = (
-        spark.read.parquet(f"{path}/sums")
-        .join(complete, "epoch", "left_semi")
+        read_completed(spark, path, "sums", epochs)
         .groupBy("i")
         .agg(F.sum("s").cast("long").alias("s"))
     )
@@ -426,6 +396,21 @@ def moments_read(spark, path: str) -> DataFrame:
             "j",
         )
         .select("i", "j", "gram", "s_i", "s_j", "n")
+    )
+
+
+def moments_compact(spark, src_path: str, dst_path: str) -> None:
+    """Fold the per-epoch partials to ONE epoch-0 store at a NEW path
+    (swap by repoint); orphans from a crashed append are dropped by the
+    epoch-SET read.  The running n_rows carries over, so a later append
+    into the new path re-bases on it."""
+    srow, _ = completed_epochs(spark, src_path, "moments_compact")
+    folded = moments_read(spark, src_path)
+    sums = folded.filter(F.col("i") == F.col("j")).select("i", F.col("s_i").alias("s"))
+    commit_epoch(
+        spark, dst_path, 0,
+        {"cells": folded.select("i", "j", "gram", "n"), "sums": sums},
+        (srow.n_rows, 0), MOMENTS_STATS_SCHEMA, mode="errorifexists",
     )
 
 

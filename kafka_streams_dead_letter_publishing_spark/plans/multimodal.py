@@ -524,9 +524,9 @@ _MEDIA_SINK_SCHEMA = (
 def docs_media_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
     from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
         MediaIngest,
-        _store_exists,
     )
 
     sink = _MEDIA_INGEST_CACHE.get(sf_dir)
@@ -579,7 +579,7 @@ def docs_media_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if not _store_exists(spark, ing.sink_path):
+        if not store_exists(spark, ing.sink_path):
             # an all-empty corpus accepts nothing — typed empty frame
             return spark.createDataFrame(
                 [], "doc_id long, dhash_hi long, dhash_lo long, n_bytes long"

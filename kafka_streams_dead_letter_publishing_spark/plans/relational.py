@@ -1757,7 +1757,7 @@ _CMS_STORE_CACHE: dict[str, str] = {}
 def events_cms_streamed_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from kafka_streams_dead_letter_publishing_spark.operators.bm25 import _store_exists
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
     from kafka_streams_dead_letter_publishing_spark.operators.cms import (
         cms_append,
         cms_estimate,
@@ -1779,7 +1779,7 @@ def events_cms_streamed_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 width=_CMS_W,
             )
         _CMS_STORE_CACHE[sf_dir] = path
-    if not _store_exists(spark, f"{path}/stats"):
+    if not store_exists(spark, f"{path}/stats"):
         # an all-empty stream appends nothing — typed empty frame
         return spark.createDataFrame([], "user_id long, est_count long")
     events = load_table(spark, sf_dir, "events").select("user_id")
@@ -2341,7 +2341,7 @@ _KMV_STORE_CACHE: dict[str, str] = {}
 def events_kmv_streamed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from kafka_streams_dead_letter_publishing_spark.operators.bm25 import _store_exists
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
     from kafka_streams_dead_letter_publishing_spark.operators.kmv import (
         kmv_append,
         kmv_estimate,
@@ -2364,7 +2364,7 @@ def events_kmv_streamed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 KMV_K,
             )
         _KMV_STORE_CACHE[sf_dir] = path
-    if not _store_exists(spark, f"{path}/stats"):
+    if not store_exists(spark, f"{path}/stats"):
         # an all-empty stream appends nothing — typed empty frame
         return spark.createDataFrame(
             [], "event_type string, n_sketch long, est_users long"
@@ -2575,7 +2575,7 @@ _HIST_STORE_CACHE: dict[str, str] = {}
 def events_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from kafka_streams_dead_letter_publishing_spark.operators.bm25 import _store_exists
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
     from kafka_streams_dead_letter_publishing_spark.operators.hist import (
         hist_append,
         hist_quantile_bins,
@@ -2611,7 +2611,7 @@ def events_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                     width=width,
                 )
         _HIST_STORE_CACHE[sf_dir] = path
-    if not _store_exists(spark, f"{path}/stats"):
+    if not store_exists(spark, f"{path}/stats"):
         # an all-empty stream appends nothing — typed empty frame
         return spark.createDataFrame(
             [],

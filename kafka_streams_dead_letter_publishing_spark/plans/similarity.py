@@ -1058,9 +1058,9 @@ def emb_ann_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         deliver_slice,
         stage_drive_slices,
     )
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
     from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
         EmbeddingIngest,
-        _store_exists,
     )
 
     sink = _EMB_INGEST_CACHE.get(sf_dir)
@@ -1122,7 +1122,7 @@ def emb_ann_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if not _store_exists(spark, ing.vectors_path):
+        if not store_exists(spark, ing.vectors_path):
             return spark.createDataFrame([], "vec_id long, nrm double")
         _EMB_INGEST_CACHE[sf_dir] = ing.vectors_path
         sink = ing.vectors_path

@@ -557,9 +557,9 @@ def docs_doc_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_dead_letter_publishing_spark.plans.registry import (
         _capture_drive_stats,
     )
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
     from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
         DocumentIngest,
-        _store_exists,
     )
 
     sink = _DOC_INGEST_CACHE.get(sf_dir)
@@ -620,7 +620,7 @@ def docs_doc_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if not _store_exists(spark, ing.corpus_path):
+        if not store_exists(spark, ing.corpus_path):
             return spark.createDataFrame([], "doc_id long, fp string, n_sh long")
         _DOC_INGEST_CACHE[sf_dir] = ing.corpus_path
         sink = ing.corpus_path
@@ -1577,9 +1577,7 @@ def docs_budget_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_dead_letter_publishing_spark.streaming.budget_ingest import (
         BudgetCappedIngest,
     )
-    from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
-        _store_exists,
-    )
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
 
     sink = _BUDGET_INGEST_CACHE.get(sf_dir)
     if sink is None:
@@ -1653,7 +1651,7 @@ def docs_budget_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         BudgetCappedIngest(f"{base}/ingest", budgets).process_batch(
             spark.read.schema(docs.schema).parquet(f"{stage}/b0"), 0
         )
-        if not _store_exists(spark, ing.corpus_path):
+        if not store_exists(spark, ing.corpus_path):
             return spark.createDataFrame(
                 [], "doc_id long, source string, n_tokens long"
             )
@@ -2780,7 +2778,7 @@ def docs_bloom_streamed_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_append,
         bloom_read,
     )
-    from kafka_streams_dead_letter_publishing_spark.operators.bm25 import _store_exists
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
 
     docs = load_table(spark, sf_dir, "documents")
     seen = docs.select(fingerprint(F.col("text")).alias("fp")).distinct()
@@ -2806,7 +2804,7 @@ def docs_bloom_streamed_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 m_bits=_BLOOM_M,
             )
         _BLOOM_STORE_CACHE[sf_dir] = path
-    if not _store_exists(spark, f"{path}/stats"):
+    if not store_exists(spark, f"{path}/stats"):
         # an all-empty stream appends nothing — typed empty frame
         return spark.createDataFrame(
             [], "maybe_seen boolean, is_dup boolean, n_keys long"
@@ -3250,10 +3248,10 @@ def docs_bm25_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kafka_streams_dead_letter_publishing_spark.operators.bm25 import (
         _EMPTY_RESULT_SCHEMA,
-        _store_exists,
         bm25_append,
         bm25_serve,
     )
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
 
     path = _BM25_INDEX_CACHE.get(sf_dir)
     if path is None:
@@ -3265,7 +3263,7 @@ def docs_bm25_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_append(docs.filter(F.col("doc_id") % 2 == 0), path)
         bm25_append(docs.filter(F.col("doc_id") % 2 == 1), path)
         _BM25_INDEX_CACHE[sf_dir] = path
-    if not _store_exists(spark, f"{path}/stats"):
+    if not store_exists(spark, f"{path}/stats"):
         # an all-empty-batch stream appends nothing (appends never write
         # a zero stats row) — an empty corpus serves the typed empty frame
         return spark.createDataFrame([], _EMPTY_RESULT_SCHEMA)

@@ -37,14 +37,7 @@ from pyspark.sql import functions as F
 from kafka_streams_dead_letter_publishing_spark.operators.budget import (
     token_budget_sample,
 )
-
-
-def _store_exists(spark: SparkSession, path: str) -> bool:
-    from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
-        _store_exists as probe,
-    )
-
-    return probe(spark, path)
+from kafka_streams_dead_letter_publishing_spark.operators.stores import store_exists
 
 
 class BudgetCappedIngest:
@@ -87,7 +80,7 @@ class BudgetCappedIngest:
         lifetime; afterwards maintained incrementally by process_batch."""
         if self._cache is not None:
             return self._cache
-        if not _store_exists(spark, self.totals_path):
+        if not store_exists(spark, self.totals_path):
             self._cache = ({}, -1)
             return self._cache
         rows = spark.read.parquet(self.totals_path).collect()
@@ -192,7 +185,7 @@ class BudgetCappedIngest:
         spark.createDataFrame(rows, "g string, tokens long").withColumn(
             "batch_id", F.lit(int(hwm)).cast("long")
         ).coalesce(1).write.mode("errorifexists").parquet(f"{new_base_dir}/totals")
-        if _store_exists(spark, self.corpus_path):
+        if store_exists(spark, self.corpus_path):
             spark.read.parquet(self.corpus_path).repartition(self.id_col).write.mode(
                 "errorifexists"
             ).parquet(f"{new_base_dir}/corpus")

@@ -91,50 +91,12 @@ from kafka_streams_dead_letter_publishing_spark.operators.neardup_filter import 
     build_neardup_index,
 )
 from kafka_streams_dead_letter_publishing_spark.operators.occupancy import drop_hot_keys
-
-
-def _store_exists(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` holds at least one data file — via the Hadoop
-    FileSystem API, so non-local schemes (hdfs://, s3a://) probe exactly
-    like the paths Spark writes (a driver-local os.listdir would silently
-    disengage the cross-batch filter on any remote store)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return False
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not (name.startswith("_") or name.startswith(".")):
-            return True
-    return False
-
-
-def _dir_exists(spark: SparkSession, path: str) -> bool:
-    """Bare Hadoop-FS existence probe (file OR dir, markers included) —
-    generation allocation must see PARTIAL dirs too, which the data-file
-    probe above deliberately ignores."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-def _data_file_count(spark: SparkSession, path: str) -> int:
-    """Number of data files under ``path`` — a driver-side metadata
-    listing (no Spark job), the gauge for file-count compaction
-    cadences."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return 0
-    n = 0
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not (name.startswith("_") or name.startswith(".")):
-            n += 1
-    return n
+from kafka_streams_dead_letter_publishing_spark.operators.stores import (
+    allocate_generation,
+    data_file_count,
+    resume_generations,
+    store_exists,
+)
 
 
 class EmbeddingIngest:
@@ -176,11 +138,8 @@ class EmbeddingIngest:
         #: the store filter re-reads ALL of them each micro-batch.  When
         #: the buckets store's data-file count exceeds this, process_batch
         #: folds buckets+vectors into a new ``ann-gen{g}`` generation dir
-        #: and repoints (swap-by-repoint; the IVF/PQ/moments payload
-        #: stores are never rewritten).  Restart resume repoints each
-        #: store at its newest _SUCCESS-complete generation; a crashed
-        #: fold's partial dir is skipped for reads and skipped past for
-        #: allocation (the MediaIngest contract).
+        #: (the generation contract of operators/stores.py; the
+        #: IVF/PQ/moments payload stores are never rewritten).
         self.auto_compact_files = auto_compact_files
         self._gen = 0
         self._resumed = False
@@ -297,22 +256,16 @@ class EmbeddingIngest:
         return batch.join(drop, self.id_col, "left_anti")
 
     def _resume_generations(self, spark: SparkSession) -> None:
-        """Repoint buckets/vectors at their newest COMPLETE generation
-        after a driver restart — see :meth:`DocumentIngest.
-        _resume_generations` (same per-store _SUCCESS contract)."""
+        """Repoint buckets/vectors at their newest COMPLETE ann-gen{g}
+        after a driver restart (operators/stores.py)."""
         if self._resumed:
             return
         self._resumed = True
-        gen = 0
-        while _dir_exists(spark, f"{self.base_dir}/ann-gen{gen + 1}"):
-            gen += 1
-        self._gen = gen
-        for name, attr in (("buckets", "buckets_path"), ("vectors", "vectors_path")):
-            for g in range(gen, 0, -1):
-                cand = f"{self.base_dir}/ann-gen{g}/{name}"
-                if _dir_exists(spark, f"{cand}/_SUCCESS"):
-                    setattr(self, attr, cand)
-                    break
+        self._gen, found = resume_generations(
+            spark, self.base_dir, "ann", ("buckets", "vectors")
+        )
+        for store, path in found.items():
+            setattr(self, f"{store}_path", path)
 
     def _maybe_auto_compact(self, spark: SparkSession) -> None:
         """Fold buckets+vectors into a fresh generation once the buckets
@@ -322,16 +275,14 @@ class EmbeddingIngest:
         changes a decision).  Vectors first, buckets LAST — buckets is
         the candidate side + existence gate, so it flips generations
         last."""
-        if self.auto_compact_files is None:
+        if (
+            self.auto_compact_files is None
+            or data_file_count(spark, self.buckets_path) <= self.auto_compact_files
+        ):
             return
-        if not _store_exists(spark, self.buckets_path):
-            return
-        if _data_file_count(spark, self.buckets_path) <= self.auto_compact_files:
-            return
-        self._gen += 1
-        while _dir_exists(spark, f"{self.base_dir}/ann-gen{self._gen}"):
-            self._gen += 1  # skip a crashed fold's partial dir
-        gen_dir = f"{self.base_dir}/ann-gen{self._gen}"
+        self._gen, gen_dir = allocate_generation(
+            spark, self.base_dir, "ann", self._gen
+        )
         spark.read.parquet(self.vectors_path).distinct().repartition(
             "ref_id"
         ).write.mode("errorifexists").parquet(f"{gen_dir}/vectors")
@@ -402,7 +353,7 @@ class EmbeddingIngest:
             # similar lower-id sibling was store-rejected, breaking the
             # "similar to ANY lower-id batch row" contract (r7 review)
             deduped = self._intra_batch_dedup(collapsed, bidx)
-            if _store_exists(spark, self.buckets_path):
+            if store_exists(spark, self.buckets_path):
                 from kafka_streams_dead_letter_publishing_spark.operators.ann_filter import (
                     ann_reject_ids,
                 )
@@ -518,34 +469,16 @@ class EmbeddingIngest:
         spark.read.parquet(self.buckets_path).repartition("bk").write.mode(
             "errorifexists"
         ).parquet(f"{new_base_dir}/buckets")
-        if self.pq_books is not None and _store_exists(spark, self.pq_path):
+        if self.pq_books is not None and store_exists(spark, self.pq_path):
             spark.read.parquet(self.pq_path).repartition("cluster").write.mode(
                 "errorifexists"
             ).partitionBy("cluster").parquet(f"{new_base_dir}/pqcodes")
-        if self.moments_store and _store_exists(spark, f"{self.moments_path}/stats"):
-            # collapse the per-batch partials to ONE epoch: moments_read
-            # folds complete epochs (orphans dropped), a fresh append
-            # into the new path re-bases the running totals
+        if self.moments_store and store_exists(spark, f"{self.moments_path}/stats"):
             from kafka_streams_dead_letter_publishing_spark.operators.pca import (
-                moments_read,
+                moments_compact,
             )
 
-            srow = (
-                spark.read.parquet(f"{self.moments_path}/stats")
-                .orderBy(F.desc("epoch")).first()
-            )
-            folded = moments_read(spark, self.moments_path)
-            folded.select("i", "j", "gram", "n").withColumn(
-                "epoch", F.lit(0).cast("long")
-            ).write.mode("errorifexists").parquet(f"{new_base_dir}/moments/cells")
-            folded.filter(F.col("i") == F.col("j")).select(
-                "i", F.col("s_i").alias("s")
-            ).withColumn("epoch", F.lit(0).cast("long")).write.mode(
-                "errorifexists"
-            ).parquet(f"{new_base_dir}/moments/sums")
-            spark.createDataFrame(
-                [(srow.n_rows, 0)], "n_rows bigint, epoch bigint"
-            ).write.mode("errorifexists").parquet(f"{new_base_dir}/moments/stats")
+            moments_compact(spark, self.moments_path, f"{new_base_dir}/moments")
         # hand-off: drop this instance's pinned decontam index before the
         # fresh pipeline takes over (it rebuilds lazily on first batch) —
         # otherwise every compaction cycle leaks two cached frames
@@ -662,13 +595,9 @@ class DocumentIngest:
         #: curve probe_store_growth measured before MediaIngest got its
         #: knob.  When the bands store's data-file count exceeds this,
         #: process_batch folds bands/shingles/lines into a new
-        #: ``nd-gen{g}`` generation dir and repoints (swap-by-repoint —
-        #: the corpus sink and bm25 store are never rewritten; a
-        #: concurrent reader of the old generation keeps a complete
-        #: view).  Gauge is a driver-side Hadoop listing; restart resume
-        #: repoints each store at its newest generation with a _SUCCESS
-        #: marker, and a crashed fold's partial dir is skipped for reads
-        #: and skipped past for allocation (the MediaIngest contract).
+        #: ``nd-gen{g}`` generation dir (the generation contract of
+        #: operators/stores.py; the corpus sink and bm25 store are never
+        #: rewritten).
         self.auto_compact_files = auto_compact_files
         self._gen = 0
         self._resumed = False
@@ -736,7 +665,7 @@ class DocumentIngest:
         )
         seen = (
             spark.read.parquet(self.lines_path).select("line_fp")
-            if _store_exists(spark, self.lines_path)
+            if store_exists(spark, self.lines_path)
             else None
         )
         flagged = corpus_line_first_occurrence(
@@ -828,29 +757,17 @@ class DocumentIngest:
         return batch.join(drop, self.id_col, "left_anti")
 
     def _resume_generations(self, spark: SparkSession) -> None:
-        """Repoint each gate store at its newest COMPLETE generation after
-        a driver restart (the MediaIngest/EventIngest contract): a store's
-        fold is complete when its _SUCCESS marker exists; per-store
-        fallback so a crash mid-fold (some stores folded, some not)
-        resumes safely — content is identical across generations, so
-        mixed repoints never change decisions.  The next allocation skips
-        past any partial dir."""
+        """Repoint each gate store at its newest COMPLETE nd-gen{g} after
+        a driver restart (operators/stores.py) — content is identical
+        across generations, so mixed per-store repoints never change
+        decisions."""
         if self._resumed:
             return
         self._resumed = True
-        gen = 0
-        while _dir_exists(spark, f"{self.base_dir}/nd-gen{gen + 1}"):
-            gen += 1
-        self._gen = gen
-        stores = [("bands", "bands_path"), ("shingles", "shingles_path")]
-        if self.line_dedup:
-            stores.append(("lines", "lines_path"))
-        for name, attr in stores:
-            for g in range(gen, 0, -1):
-                cand = f"{self.base_dir}/nd-gen{g}/{name}"
-                if _dir_exists(spark, f"{cand}/_SUCCESS"):
-                    setattr(self, attr, cand)
-                    break
+        stores = ("bands", "shingles") + (("lines",) if self.line_dedup else ())
+        self._gen, found = resume_generations(spark, self.base_dir, "nd", stores)
+        for store, path in found.items():
+            setattr(self, f"{store}_path", path)
 
     def _maybe_auto_compact(self, spark: SparkSession) -> None:
         """Fold the gate stores into a fresh generation dir once the bands
@@ -861,21 +778,17 @@ class DocumentIngest:
         and lines first, bands LAST — each store repoints only after its
         own _SUCCESS lands, and bands (the candidate side + existence
         gate) flipping over is what retires the old generation."""
-        if self.auto_compact_files is None:
+        if (
+            self.auto_compact_files is None
+            or data_file_count(spark, self.bands_path) <= self.auto_compact_files
+        ):
             return
-        if not _store_exists(spark, self.bands_path):
-            return
-        if _data_file_count(spark, self.bands_path) <= self.auto_compact_files:
-            return
-        self._gen += 1
-        while _dir_exists(spark, f"{self.base_dir}/nd-gen{self._gen}"):
-            self._gen += 1  # skip a crashed fold's partial dir
-        gen_dir = f"{self.base_dir}/nd-gen{self._gen}"
+        self._gen, gen_dir = allocate_generation(spark, self.base_dir, "nd", self._gen)
         spark.read.parquet(self.shingles_path).distinct().repartition(
             "ref_id"
         ).write.mode("errorifexists").parquet(f"{gen_dir}/shingles")
         self.shingles_path = f"{gen_dir}/shingles"
-        if self.line_dedup and _store_exists(spark, self.lines_path):
+        if self.line_dedup and store_exists(spark, self.lines_path):
             spark.read.parquet(self.lines_path).distinct().repartition(
                 "line_fp"
             ).write.mode("errorifexists").parquet(f"{gen_dir}/lines")
@@ -955,7 +868,7 @@ class DocumentIngest:
             # store is external and static — absence is always a
             # misconfiguration, and skipping the stage silently would let
             # contaminated docs into the corpus AND the dedup stores
-            if not _store_exists(spark, self.decontam_fps_path):
+            if not store_exists(spark, self.decontam_fps_path):
                 raise ValueError(
                     f"decontam_fps_path {self.decontam_fps_path!r} does not "
                     "exist — write it with operators.decontaminate."
@@ -991,7 +904,7 @@ class DocumentIngest:
             # intra-batch dedup FIRST, store filter second — same
             # contract-ordering reason as EmbeddingIngest
             deduped = self._intra_batch_dedup(collapsed, bidx)
-            if _store_exists(spark, self.bands_path):
+            if store_exists(spark, self.bands_path):
                 from kafka_streams_dead_letter_publishing_spark.operators.neardup_filter import (
                     neardup_reject_ids,
                     validate_bands_store_family,
@@ -1076,11 +989,11 @@ class DocumentIngest:
         spark.read.parquet(self.bands_path).repartition("bk").write.mode(
             "errorifexists"
         ).parquet(f"{new_base_dir}/bands")
-        if self.line_dedup and _store_exists(spark, self.lines_path):
+        if self.line_dedup and store_exists(spark, self.lines_path):
             spark.read.parquet(self.lines_path).distinct().repartition(
                 "line_fp"
             ).write.mode("errorifexists").parquet(f"{new_base_dir}/lines")
-        if self.bm25_store and _store_exists(spark, f"{self.bm25_path}/stats"):
+        if self.bm25_store and store_exists(spark, f"{self.bm25_path}/stats"):
             from kafka_streams_dead_letter_publishing_spark.operators.bm25 import (
                 bm25_compact,
             )
@@ -1154,10 +1067,10 @@ class EventIngest:
         #: an epoch row-set to each sketch store, and a reader re-merges
         #: ALL of them — without a cadence a long-lived stream makes reads
         #: O(batches), not O(sketch).  When set, process_batch folds the
-        #: sketch stores to one epoch at a NEW generation dir once the
-        #: epoch count exceeds this, then repoints itself (swap-by-repoint
-        #: — a concurrent reader of the old generation keeps a complete
-        #: view; the events SINK is never rewritten, only sketches).
+        #: sketch stores to one epoch at a new ``sketch-gen{g}`` dir once
+        #: the epoch count exceeds this (the generation contract of
+        #: operators/stores.py; the events SINK is never rewritten, only
+        #: sketches).
         self.auto_compact_epochs = auto_compact_epochs
         self._sketch_gen = 0
         #: approximate completed-epoch count, maintained from kmv_append's
@@ -1169,42 +1082,22 @@ class EventIngest:
         self._resumed = False
 
     def _resume_generations(self) -> None:
-        """Repoint at the newest COMPLETE sketch generation on disk — the
-        swap-by-repoint previously lived only in process memory, so a
-        driver restart over the same base_dir silently read the stale
-        pre-compaction store and then collided on the generation dir
-        (r14 review).  Runs once per instance; a generation is complete
-        when its KMV store (written first by _maybe_auto_compact) has a
-        stats row; per-store repoints fall back per store so a crash
-        mid-compaction resumes safely, and the NEXT generation number
-        skips past any partial dir."""
+        """Repoint each sketch store at its newest COMPLETE sketch-gen{g}
+        after a driver restart (operators/stores.py) — a store's fold is
+        complete when its stats dir, written last, holds _SUCCESS."""
         if self._resumed:
             return
         self._resumed = True
         spark = SparkSession.getActiveSession()
         if spark is None:
             return
-        gen = 0
-        while _store_exists(spark, f"{self.base_dir}/sketch-gen{gen + 1}"):
-            gen += 1
-        if gen == 0:
-            return
-        # _sketch_gen tracks the highest dir (complete OR partial) so the
-        # next compaction allocates past any crash leftovers
-        self._sketch_gen = gen
-        stores = [(True, "kmv")]
-        stores += [(self.cms_store, "cms"), (self.hist_store, "hist")]
-        for flag, name in stores:
-            if not flag:
-                continue
-            # each store repoints to ITS newest complete generation
-            # (stats row present — the epoch gate doubles as the
-            # compaction-completeness marker)
-            for g in range(gen, 0, -1):
-                cand = f"{self.base_dir}/sketch-gen{g}/{name}"
-                if _store_exists(spark, f"{cand}/stats"):
-                    setattr(self, f"{name}_path", cand)
-                    break
+        stores = ("kmv",) + (("cms",) if self.cms_store else ())
+        stores += ("hist",) if self.hist_store else ()
+        self._sketch_gen, found = resume_generations(
+            spark, self.base_dir, "sketch", stores, marker="stats/_SUCCESS"
+        )
+        for store, path in found.items():
+            setattr(self, f"{store}_path", path)
 
     def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
         from kafka_streams_dead_letter_publishing_spark.operators.kmv import kmv_append
@@ -1252,27 +1145,23 @@ class EventIngest:
 
         spark = SparkSession.getActiveSession()
         assert spark is not None, "auto-compact needs an active SparkSession"
-        if not _store_exists(spark, f"{self.kmv_path}/stats"):
+        if not store_exists(spark, f"{self.kmv_path}/stats"):
             return
         if self._n_epochs is None or self._n_epochs <= self.auto_compact_epochs:
             return
-        self._sketch_gen += 1
-        # skip past any partial dir a crashed compaction left behind
-        while _store_exists(
-            spark, f"{self.base_dir}/sketch-gen{self._sketch_gen}"
-        ):
-            self._sketch_gen += 1
-        gen = f"{self.base_dir}/sketch-gen{self._sketch_gen}"
+        self._sketch_gen, gen = allocate_generation(
+            spark, self.base_dir, "sketch", self._sketch_gen
+        )
         kmv_compact(spark, self.kmv_path, f"{gen}/kmv", self.k)
         self.kmv_path = f"{gen}/kmv"
-        if self.cms_store and _store_exists(spark, f"{self.cms_path}/stats"):
+        if self.cms_store and store_exists(spark, f"{self.cms_path}/stats"):
             from kafka_streams_dead_letter_publishing_spark.operators.cms import (
                 cms_compact,
             )
 
             cms_compact(spark, self.cms_path, f"{gen}/cms")
             self.cms_path = f"{gen}/cms"
-        if self.hist_store and _store_exists(spark, f"{self.hist_path}/stats"):
+        if self.hist_store and store_exists(spark, f"{self.hist_path}/stats"):
             from kafka_streams_dead_letter_publishing_spark.operators.hist import (
                 hist_compact,
             )
@@ -1291,35 +1180,32 @@ class EventIngest:
 
     def compact(self, new_base_dir: str) -> "EventIngest":
         """See :meth:`EmbeddingIngest.compact` — same NEW-path swap."""
-        from kafka_streams_dead_letter_publishing_spark.operators.bm25 import (
-            _store_exists,
-        )
         from kafka_streams_dead_letter_publishing_spark.operators.kmv import kmv_compact
 
         spark = SparkSession.getActiveSession()
         assert spark is not None, "compact() needs an active SparkSession"
-        # every path is _store_exists-guarded (r12 ADVICE): an ingest that
+        # every path is store_exists-guarded (r12 ADVICE): an ingest that
         # only ever processed empty batches compacts to a no-op instead of
         # raising on the first missing store
-        if _store_exists(spark, self.events_path):
+        if store_exists(spark, self.events_path):
             spark.read.parquet(self.events_path).repartition(
                 self.group_col
             ).write.mode("errorifexists").parquet(f"{new_base_dir}/events")
-        if _store_exists(spark, f"{self.kmv_path}/stats"):
+        if store_exists(spark, f"{self.kmv_path}/stats"):
             kmv_compact(spark, self.kmv_path, f"{new_base_dir}/kmv", self.k)
         if self.cms_store:
             from kafka_streams_dead_letter_publishing_spark.operators.cms import (
                 cms_compact,
             )
 
-            if _store_exists(spark, f"{self.cms_path}/stats"):
+            if store_exists(spark, f"{self.cms_path}/stats"):
                 cms_compact(spark, self.cms_path, f"{new_base_dir}/cms")
         if self.hist_store:
             from kafka_streams_dead_letter_publishing_spark.operators.hist import (
                 hist_compact,
             )
 
-            if _store_exists(spark, f"{self.hist_path}/stats"):
+            if store_exists(spark, f"{self.hist_path}/stats"):
                 hist_compact(spark, self.hist_path, f"{new_base_dir}/hist")
         return EventIngest(
             new_base_dir,
@@ -1362,11 +1248,8 @@ class MediaIngest:
     r15 ``auto_compact_files=K``: the gate store otherwise grows one
     small file set per batch and the anti-join re-reads ALL of them —
     the cadence folds the distinct hashes into ``dhash-gen{g}``
-    generation dirs (swap-by-repoint; the media sink is never
-    rewritten) and survives driver restarts: resume repoints at the
-    newest generation with a ``_SUCCESS`` marker, a crashed fold's
-    partial dir is skipped for reads and skipped past for allocation
-    (the EventIngest ``auto_compact_epochs`` contract).
+    generation dirs (the generation contract of operators/stores.py;
+    the media sink is never rewritten).
 
     Scale shape per batch: the hash chain is narrow JVM expressions;
     the store gate is one equi-join on (dhash_hi, dhash_lo) — uniform
@@ -1392,12 +1275,8 @@ class MediaIngest:
         #: of them, so a long-lived stream makes the gate read O(batches).
         #: When the store's data-file count exceeds this, process_batch
         #: folds the DISTINCT hashes into a new generation dir
-        #: (dhash-gen{g}) and repoints — swap-by-repoint, the media sink
-        #: is never rewritten.  The gauge is a driver-side Hadoop listing
-        #: (metadata-only, no Spark job); restart resume repoints at the
-        #: newest generation whose _SUCCESS marker exists, so a crash
-        #: mid-fold leaves a partial dir that is skipped for reads and
-        #: skipped past for the next allocation.
+        #: (dhash-gen{g}) and repoints.  The gauge is a driver-side Hadoop
+        #: listing (metadata-only, no Spark job).
         self.auto_compact_files = auto_compact_files
         self._gen = 0
         self._resumed = False
@@ -1429,7 +1308,7 @@ class MediaIngest:
             .select(self.id_col, self.payload_col, "dhash_hi", "dhash_lo")
             .localCheckpoint(eager=True)
         )
-        if _store_exists(spark, self.dhash_path):
+        if store_exists(spark, self.dhash_path):
             seen = spark.read.parquet(self.dhash_path).select(
                 "dhash_hi", "dhash_lo"
             )
@@ -1455,32 +1334,23 @@ class MediaIngest:
         self._maybe_auto_compact(spark)
 
     def _resume_generations(self, spark: SparkSession) -> None:
-        """Repoint at the newest COMPLETE dhash generation after a driver
-        restart (the EventIngest._resume_generations contract): a
-        generation is complete when Spark's _SUCCESS marker exists; the
-        next allocation skips past any partial dir a crashed fold left."""
+        """Repoint at the newest COMPLETE dhash-gen{g} after a driver
+        restart (operators/stores.py; the generation dir IS the store)."""
         if self._resumed:
             return
         self._resumed = True
-        gen = 0
-        while _dir_exists(spark, f"{self.base_dir}/dhash-gen{gen + 1}"):
-            gen += 1
-        self._gen = gen
-        for g in range(gen, 0, -1):
-            cand = f"{self.base_dir}/dhash-gen{g}"
-            if _dir_exists(spark, f"{cand}/_SUCCESS"):
-                self.dhash_path = cand
-                break
+        self._gen, found = resume_generations(spark, self.base_dir, "dhash", ("",))
+        self.dhash_path = found.get("", self.dhash_path)
 
     def _maybe_auto_compact(self, spark: SparkSession) -> None:
-        if self.auto_compact_files is None:
+        if (
+            self.auto_compact_files is None
+            or data_file_count(spark, self.dhash_path) <= self.auto_compact_files
+        ):
             return
-        if _data_file_count(spark, self.dhash_path) <= self.auto_compact_files:
-            return
-        self._gen += 1
-        while _dir_exists(spark, f"{self.base_dir}/dhash-gen{self._gen}"):
-            self._gen += 1  # skip a crashed fold's partial dir
-        new_path = f"{self.base_dir}/dhash-gen{self._gen}"
+        self._gen, new_path = allocate_generation(
+            spark, self.base_dir, "dhash", self._gen
+        )
         spark.read.parquet(self.dhash_path).distinct().repartition(
             "dhash_hi"
         ).write.mode("errorifexists").parquet(new_path)

@@ -1215,9 +1215,9 @@ def test_document_ingest_auto_compaction_bounds_gate_files(spark, tmp_path):
     gate stores): a long drive keeps the bands store's data-file count
     bounded (folds into nd-gen{g} dirs), decisions equal an uncompacted
     twin's, and the folded store content equals the twin's distinct rows."""
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import data_file_count
     from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
         DocumentIngest,
-        _data_file_count,
     )
 
     docs = synth_documents(spark, 120, planted_every=5).persist()
@@ -1228,7 +1228,7 @@ def test_document_ingest_auto_compaction_bounds_gate_files(spark, tmp_path):
         ing.process_batch(batch, b)
         twin.process_batch(batch, b)
         # right after a fold: <= shuffle partitions (8); without: <= 4 + 8
-        assert _data_file_count(spark, ing.bands_path) <= 12, b
+        assert data_file_count(spark, ing.bands_path) <= 12, b
     assert "nd-gen" in ing.bands_path  # at least one fold happened
     kept_a = sorted(r.doc_id for r in spark.read.parquet(ing.corpus_path).collect())
     kept_p = sorted(r.doc_id for r in spark.read.parquet(twin.corpus_path).collect())
@@ -1288,9 +1288,9 @@ def test_embedding_ingest_auto_compaction_bounds_gate_files(spark, tmp_path):
     from kafka_streams_dead_letter_publishing_spark.operators.kmeans import (
         kmeans_fit_quantized,
     )
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import data_file_count
     from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
         EmbeddingIngest,
-        _data_file_count,
     )
 
     emb = synth_embeddings(spark, 120, planted_every=10).persist()
@@ -1302,7 +1302,7 @@ def test_embedding_ingest_auto_compaction_bounds_gate_files(spark, tmp_path):
         batch = emb.filter(F.col("vec_id") % 4 == b)
         ing.process_batch(batch, b)
         twin.process_batch(batch, b)
-        assert _data_file_count(spark, ing.buckets_path) <= 12, b
+        assert data_file_count(spark, ing.buckets_path) <= 12, b
     assert "ann-gen" in ing.buckets_path
     kept_a = sorted(r.ref_id for r in spark.read.parquet(ing.vectors_path).collect())
     kept_p = sorted(r.ref_id for r in spark.read.parquet(twin.vectors_path).collect())

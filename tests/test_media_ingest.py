@@ -145,9 +145,7 @@ def test_auto_compaction_bounds_store_files_and_preserves_gate(spark, tmp_path):
     """auto_compact_files=K: a long drive keeps the dhash store's data-file
     count bounded (folds into dhash-gen{g} dirs), the gate still rejects
     every replayed hash, and the readout equals an uncompacted twin's."""
-    from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
-        _data_file_count,
-    )
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import data_file_count
 
     imgs = _images(30, seed=21)
     ing = MediaIngest(str(tmp_path / "auto"), auto_compact_files=4)
@@ -159,7 +157,7 @@ def test_auto_compaction_bounds_store_files_and_preserves_gate(spark, tmp_path):
             batch.append((100 * b + 9, imgs[0]))
         ing.process_batch(_rows(spark, batch), b)
         twin.process_batch(_rows(spark, batch), b)
-        assert _data_file_count(spark, ing.dhash_path) <= 4 + 8, b
+        assert data_file_count(spark, ing.dhash_path) <= 4 + 8, b
     assert ing.dhash_path != str(tmp_path / "auto" / "dhash")  # folded
     kept_a = sorted(r.doc_id for r in spark.read.parquet(ing.sink_path).collect())
     kept_p = sorted(r.doc_id for r in spark.read.parquet(twin.sink_path).collect())

@@ -130,25 +130,28 @@ def test_clear_plan_caches_evicts_and_rebuilds(spark):
         _PIPELINE_STAGE_SLOT,
     )
 
+    def persistent_rdd_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
     sf = "/root/testdata/sf0.001"
+    ids_start = persistent_rdd_ids()
     before = QUERIES["docs_pretraining_pipeline"].spark(spark, sf).count()
     assert len(_PIPELINE_STAGE_SLOT) == 1  # exactly the live invocation's
     # a second invocation must RELEASE the first frame, never stack — and
     # must not reuse it (fresh barrier per call, no cross-call memo).
     # NOTE storageLevel can't witness the release: both invocations build
     # the IDENTICAL analyzed plan, so the plan-keyed cacheManager lookup
-    # hits invocation #2's live entry.  The JVM cache registry count is
-    # the ground truth — it must stay flat, not grow per invocation.
+    # hits invocation #2's live entry.  The JVM cache registry is the
+    # ground truth — the RDDs added since the start must stay flat, not
+    # grow per invocation.  Counting only ids absent at the start keeps
+    # the ContextCleaner freeing RDDs of earlier tests out of the count.
     first = _PIPELINE_STAGE_SLOT[0]
-    cached_after_first = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    added_after_first = persistent_rdd_ids() - ids_start
     again = QUERIES["docs_pretraining_pipeline"].spark(spark, sf).count()
     assert again == before
     assert len(_PIPELINE_STAGE_SLOT) == 1
     assert _PIPELINE_STAGE_SLOT[0] is not first
-    assert (
-        spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-        == cached_after_first
-    )
+    assert len(persistent_rdd_ids() - ids_start) == len(added_after_first)
     clear_plan_caches()
     assert not _PIPELINE_STAGE_SLOT
     assert not _LEARNED_INDEX_CACHE

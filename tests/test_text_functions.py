@@ -4,12 +4,21 @@ losslessness of the pigeonhole chunking."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from kafka_streams_dead_letter_publishing_spark.functions.similarity import (
+    dot,
+    lsh_table_keys_int,
+)
 from kafka_streams_dead_letter_publishing_spark.functions.text import (
     SIMHASH64_BITS,
     SIMHASH_CHUNK_BITS,
     SIMHASH_N_CHUNKS,
+    band_keys_from_minhash,
+    band_keys_from_minhash_fast,
+    minhash_array,
+    minhash_array_fast,
     shingles,
     simhash64,
     tokens,
@@ -157,6 +166,56 @@ def test_minhash_str_form_matches_column_form(spark):
         str_bk = col_mh.select("doc_id", bk_fn("mh", "n_sh").alias("bk"))
         assert col_bk.exceptAll(str_bk).count() == 0
         assert str_bk.exceptAll(col_bk).count() == 0
+
+
+#: each builder takes a column factory: ``str`` (the memoized SQL form)
+#: or ``F.col`` (the Column form)
+_SQL_NAME_FORMS = {
+    "dot": lambda c: dot(c("e-1"), c("e-1")),
+    "lsh_table_keys_int": lambda c: lsh_table_keys_int(c("e-1")),
+    "minhash_array": lambda c: minhash_array(c("s-1")),
+    "band_keys_from_minhash": lambda c: band_keys_from_minhash(c("m-1"), c("n-1")),
+    "minhash_array_fast": lambda c: minhash_array_fast(c("s-1")),
+    "band_keys_from_minhash_fast": lambda c: band_keys_from_minhash_fast(
+        c("f-1"), c("n-1")
+    ),
+}
+
+
+@pytest.mark.parametrize("form", sorted(_SQL_NAME_FORMS))
+def test_sql_fast_paths_quote_column_names(spark, form):
+    """A str column name that is not a plain identifier (``e-1`` would
+    parse as a subtraction) must mean the same column in the memoized
+    SQL form as in the Column form."""
+    import random
+
+    random.seed(5)
+    words = ["alpha", "beta", "gamma", "delta"]
+    rows = [
+        (
+            [random.uniform(-1, 1) for _ in range(64)],
+            [" ".join(random.choices(words, k=3)) for _ in range(i % 4)],
+        )
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(rows, "`e-1` array<double>, `s-1` array<string>")
+    df = df.select(
+        "*",
+        minhash_array(F.col("s-1")).alias("m-1"),
+        minhash_array_fast(F.col("s-1")).alias("f-1"),
+        F.size("s-1").alias("n-1"),
+    )
+    build = _SQL_NAME_FORMS[form]
+    got = df.select(build(str).alias("s"), build(F.col).alias("c")).collect()
+    assert len(got) == 12 and all(r.s == r.c for r in got)
+
+
+def test_sql_ident_refuses_backticks():
+    from kafka_streams_dead_letter_publishing_spark.functions.text import sql_ident
+
+    assert sql_ident("e-1") == "`e-1`"
+    with pytest.raises(ValueError, match="backtick"):
+        sql_ident("a`b")
 
 
 def test_pii_redaction_and_counts(spark):

@@ -52,9 +52,9 @@ def media_main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import data_file_count
     from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
         MediaIngest,
-        _data_file_count,
     )
 
     spark = (
@@ -107,7 +107,7 @@ def media_main() -> None:
             ing.process_batch(batch, b)
         if b % sample_every == 0 or b == n_batches:
             for name, ing in drives.items():
-                files = _data_file_count(spark, ing.dhash_path)
+                files = data_file_count(spark, ing.dhash_path)
                 t0 = time.time()
                 spark.read.parquet(ing.dhash_path).count()
                 samples[name].append((b, files, time.time() - t0))
@@ -146,9 +146,9 @@ def doc_main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import data_file_count
     from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
         DocumentIngest,
-        _data_file_count,
     )
 
     spark = (
@@ -188,7 +188,7 @@ def doc_main() -> None:
             ing.process_batch(batch, b)
         if b % sample_every == 0 or b == n_batches:
             for name, ing in drives.items():
-                files = _data_file_count(spark, ing.bands_path)
+                files = data_file_count(spark, ing.bands_path)
                 t0 = time.time()
                 spark.read.parquet(ing.bands_path).count()
                 spark.read.parquet(ing.shingles_path).count()
@@ -226,9 +226,9 @@ def emb_main() -> None:
     from kafka_streams_dead_letter_publishing_spark.sources.synth import (
         synth_embeddings,
     )
+    from kafka_streams_dead_letter_publishing_spark.operators.stores import data_file_count
     from kafka_streams_dead_letter_publishing_spark.streaming.ingest_pipeline import (
         EmbeddingIngest,
-        _data_file_count,
     )
 
     spark = (
@@ -269,7 +269,7 @@ def emb_main() -> None:
             ing.process_batch(batch, b)
         if b % sample_every == 0 or b == n_batches:
             for name, ing in drives.items():
-                files = _data_file_count(spark, ing.buckets_path)
+                files = data_file_count(spark, ing.buckets_path)
                 t0 = time.time()
                 spark.read.parquet(ing.buckets_path).count()
                 spark.read.parquet(ing.vectors_path).count()
